@@ -204,6 +204,13 @@ _SPLIT_KEY = {
 }
 
 
+# Split tables below this size inherit the build's splits; above it they
+# get one file per core slot, and past _SPLIT_FILE_BYTES per file, more.
+# Both are in ensure_scaled's fingerprint: a change rebuilds the corpus.
+_SPLIT_MIN_BYTES = 4 << 20
+_SPLIT_FILE_BYTES = 128 << 20
+
+
 def scaled_table_layout(
     tname: str, est_bytes: int, default_parallelism: int
 ) -> tuple[int, str] | None:
@@ -213,20 +220,22 @@ def scaled_table_layout(
     core slot, growing past 128 MB/file for genuinely large corpora —
     see the rationale comment in ensure_scaled._build."""
     split_key = _SPLIT_KEY.get(tname)
-    if split_key is None or est_bytes < (4 << 20):
+    if split_key is None or est_bytes < _SPLIT_MIN_BYTES:
         return None
-    n_files = int(max(default_parallelism, est_bytes // (128 << 20)))
+    n_files = int(max(default_parallelism, est_bytes // _SPLIT_FILE_BYTES))
     return n_files, split_key
 
 
 def _src_bytes(path: str) -> int:
-    """Total on-disk bytes of a parquet file or directory."""
+    """Total on-disk bytes of a parquet file or directory, without
+    metadata (`_SUCCESS`, `_metadata`) and hidden files (the local
+    filesystem's `.crc` checksum sidecars)."""
     if os.path.isfile(path):
         return os.path.getsize(path)
     total = 0
     for root, _dirs, files in os.walk(path):
         for f in files:
-            if not f.startswith("_"):
+            if not f.startswith(("_", ".")):
                 total += os.path.getsize(os.path.join(root, f))
     return total
 
@@ -257,6 +266,8 @@ def ensure_scaled(
         # its stats) to chase its own defaultParallelism.
         "layout": "range-split-v3",
         "split_keys": dict(_SPLIT_KEY),
+        "split_min_bytes": _SPLIT_MIN_BYTES,
+        "split_file_bytes": _SPLIT_FILE_BYTES,
     }
 
     def _build(path: str) -> None:

@@ -57,6 +57,13 @@ RUNTIME_CONFS = {
     # object-store deployment with >>10k partitions should drop this
     # back toward the 32 default so listing parallelizes.
     "spark.sql.sources.parallelPartitionDiscovery.threshold": "16384",
+    # Name every whole-stage class `GeneratedIterator` instead of
+    # `...ForCodegenStage<id>`: the stage id is part of the generated
+    # source, so two identical pipelines at different stage positions
+    # (the same scan+filter in two queries, or in one query's two
+    # subtrees) would otherwise be two codegen-cache entries and two
+    # Janino compiles.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 
@@ -139,6 +146,14 @@ def get_spark(
             ),
         )
         .config("spark.ui.enabled", "false")
+        # Janino compile cache (static conf: launch only), an LRU keyed
+        # by generated source. When a session cycles through more
+        # distinct classes than the cache holds, every class is evicted
+        # before the query that needs it comes round again, so at
+        # Spark's default of 100 entries a repeat query recompiles
+        # its whole plan. The size covers the classes of perfbench's
+        # `mix` warm-up plus one timed pass (scale 0.01), with headroom.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     for k, v in RUNTIME_CONFS.items():

@@ -89,7 +89,23 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+# View memo, keyed per live session like _TABLE_CACHE: view name -> the
+# table() handle the view was last created from. Creating a view
+# analyzes its plan and replaces the session catalog entry, and every
+# SQL query build registers all ten, so register_views re-creates only
+# a view whose handle changed: a rewritten file or another sf_dir. The
+# views named in TABLE_NAMES belong to register_views; code that
+# replaces or drops one of them behind its back is not seen here.
+_VIEW_HANDLES: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view (for spark.sql queries)."""
+    views = _VIEW_HANDLES.setdefault(spark, {})
     for name in TABLE_NAMES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
+        df = table(spark, sf_dir, name)
+        if views.get(name) is not df:
+            df.createOrReplaceTempView(name)
+            views[name] = df

@@ -169,3 +169,17 @@ def test_scaled_table_layout_policy():
     assert bench.scaled_table_layout("documents", 1 << 30, 32) is None
     # tiny split tables inherit (not worth empty scan tasks)
     assert bench.scaled_table_layout("supplier", 1 << 20, 32) is None
+
+
+def test_src_bytes_counts_only_data_files(tmp_path):
+    """The layout's size estimate counts data files only: Spark's
+    `_SUCCESS` marker and the local filesystem's hidden `.crc`
+    checksum sidecars would inflate it."""
+    d = tmp_path / "t.parquet"
+    (d / "k=1").mkdir(parents=True)
+    (d / "part-0.parquet").write_bytes(b"x" * 100)
+    (d / "k=1" / "part-1.parquet").write_bytes(b"x" * 50)
+    (d / ".part-0.parquet.crc").write_bytes(b"x" * 12)
+    (d / "_SUCCESS").write_bytes(b"")
+    assert bench._src_bytes(str(d)) == 150
+    assert bench._src_bytes(str(d / "part-0.parquet")) == 100

@@ -2448,13 +2448,18 @@ def test_effective_max_split_bytes_tracks_spark_formula(spark):
     bytesPerCore)) — the guard threshold must follow the conf, not a
     hardcoded 128 MB (with a small openCost a small store's real split
     is a few MB)."""
+    from opusdb_spark.session import scoped_confs
     from opusdb_spark.sources.formats import effective_max_split_bytes
 
     par = max(spark.sparkContext.defaultParallelism, 1)
     open_cost = 4 << 20
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(128 << 20))
-    spark.conf.set("spark.sql.files.openCostInBytes", str(open_cost))
-    try:
+    with scoped_confs(
+        spark,
+        {
+            "spark.sql.files.maxPartitionBytes": str(128 << 20),
+            "spark.sql.files.openCostInBytes": str(open_cost),
+        },
+    ):
         # tiny store: bytesPerCore below openCost -> openCost floor
         assert effective_max_split_bytes(spark, [1000]) == open_cost
         # huge store: bytesPerCore above maxPartitionBytes -> capped
@@ -2466,9 +2471,6 @@ def test_effective_max_split_bytes_tracks_spark_formula(spark):
         sizes = [(16 << 20)] * par
         total = sum(sizes) + open_cost * len(sizes)
         assert effective_max_split_bytes(spark, sizes) == total // par
-    finally:
-        spark.conf.unset("spark.sql.files.maxPartitionBytes")
-        spark.conf.unset("spark.sql.files.openCostInBytes")
 
 
 # ------------------------------------------- continuous-aggregate rollup
