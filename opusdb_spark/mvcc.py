@@ -22,10 +22,22 @@ versions `(key, write_point, value...)`:
                 snapshot, constant across write points when updates
                 only move value between keys (benchmark/bank.clj:41-44)
 
-Scale notes: every operation is a window over `partitionBy(key)` — one
-hash shuffle on the key, no driver state. At 100 TB the versions table
-is written partitioned/bucketed by key so these windows are
-shuffle-free local sorts.
+Scale notes: every per-key operation (`latest`, `snapshot`, `retain`,
+`snapshot_diff`, and the max-write-point aggregate that stamps a
+commit) is a window or aggregate over the key, and its input takes one
+of two physical shapes, chosen at plan time from Catalyst's size
+estimate of the input (`_keyed_input`):
+
+- estimate ≤ `_SINGLE_TASK_MAX_BYTES`: the input is coalesced to one
+  partition, so the window or aggregate needs no Exchange and a
+  snapshot sum runs as one job of one task. A small store pays the
+  per-job scheduling floor once instead of once per shuffle stage;
+- larger, or no estimate: one hash shuffle on the key, no driver
+  state. At 100 TB the versions table is written partitioned/bucketed
+  by key so these windows are shuffle-free local sorts.
+
+The window and aggregate definitions are the same on both shapes; only
+the input partitioning differs, and the choice costs no Spark job.
 """
 
 from __future__ import annotations
@@ -43,6 +55,31 @@ MAX_HISTORY = 16  # reference stm.clj:10
 # is deterministic and costs no action.
 _SINGLE_SORT_MAX_VERSIONS = 1 << 22
 
+# Per-key operations whose input Catalyst estimates at or under this
+# many bytes run in one task (`_keyed_input`): about where one task and
+# a hash shuffle cost the same for a snapshot sum on 4 cores (measured
+# in CHANGES.md).
+_SINGLE_TASK_MAX_BYTES = 3 << 20
+
+
+def _keyed_input(df: DataFrame) -> DataFrame:
+    """`df` coalesced to one partition when the analyzed plan's size
+    estimate is at most `_SINGLE_TASK_MAX_BYTES`, else `df` unchanged.
+
+    One partition satisfies any clustering on the key, so a window or
+    aggregate over it plans without an Exchange — the same plan-time
+    call Spark makes when it broadcasts a join side under its size
+    threshold. The analyzed plan's statistics are read, not the
+    optimized plan's, so the choice needs no optimizer pass. An input
+    without a usable estimate (an RDD-backed frame reports Long.MaxValue)
+    keeps the partitioned plan.
+    """
+    try:
+        size = int(str(df._jdf.queryExecution().analyzed().stats().sizeInBytes()))
+    except Exception:
+        return df
+    return df.coalesce(1) if size <= _SINGLE_TASK_MAX_BYTES else df
+
 
 def latest(
     versions: DataFrame, key: str = "ref_id", version: str = "write_point"
@@ -50,7 +87,8 @@ def latest(
     """Newest version per key (deref outside a txn, stm.clj:161-162)."""
     w = Window.partitionBy(key).orderBy(F.col(version).desc())
     return (
-        versions.withColumn("_rn", F.row_number().over(w))
+        _keyed_input(versions)
+        .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
@@ -89,7 +127,8 @@ def snapshot_diff(
     two window passes + a join. At 100 TB that halves the shuffle and
     avoids materializing either snapshot.
     """
-    both = versions.filter(F.col(version) <= new_point).groupBy(key).agg(
+    visible = _keyed_input(versions.filter(F.col(version) <= new_point))
+    both = visible.groupBy(key).agg(
         F.max(
             F.when(
                 F.col(version) <= old_point,
@@ -128,10 +167,24 @@ def retain(
     Run as the retention pass when compacting a versions table."""
     w = Window.partitionBy(key).orderBy(F.col(version).desc())
     return (
-        versions.withColumn("_rn", F.row_number().over(w))
+        _keyed_input(versions)
+        .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= n)
         .drop("_rn")
     )
+
+
+def _commit(versions: DataFrame, rows: DataFrame, version: str) -> DataFrame:
+    """`versions` plus `rows` (no version column) stamped with ONE new
+    write point, max(existing) + 1 (or 1 on an empty store): the single
+    WRITE_POINT bump per committing transaction (stm.clj:42-43). The
+    one-row max is broadcast to the rows, so stamping adds no shuffle
+    of `rows`."""
+    nxt = _keyed_input(versions).agg(
+        (F.coalesce(F.max(version), F.lit(0)) + 1).alias("_wp")
+    )
+    stamped = rows.crossJoin(F.broadcast(nxt)).withColumnRenamed("_wp", version)
+    return versions.unionByName(stamped.select(*versions.columns))
 
 
 def append_versions(
@@ -148,11 +201,7 @@ def append_versions(
     Returns the new versions DataFrame; writing it (or just the new
     rows, mode="append") is the commit, atomic per Spark job.
     """
-    next_wp = versions.agg((F.coalesce(F.max(version), F.lit(0)) + 1).alias("_wp"))
-    stamped = updates.crossJoin(F.broadcast(next_wp)).withColumnRenamed(
-        "_wp", version
-    )
-    return versions.unionByName(stamped.select(*versions.columns))
+    return _commit(versions, updates, version)
 
 
 def read_own_writes(
@@ -171,9 +220,7 @@ def read_own_writes(
     (anyone holding only `versions`) still see the committed state,
     because nothing here mutates or publishes.
     """
-    nxt = versions.agg((F.coalesce(F.max(version), F.lit(0)) + 1).alias("_wp"))
-    stamped = pending.crossJoin(F.broadcast(nxt)).withColumnRenamed("_wp", version)
-    return latest(versions.unionByName(stamped.select(*versions.columns)), key, version)
+    return latest(_commit(versions, pending, version), key, version)
 
 
 def merge(
@@ -206,14 +253,8 @@ def merge(
     """
     if "_deleted" not in versions.columns:
         versions = versions.withColumn("_deleted", F.lit(False))
-    nxt = versions.agg((F.coalesce(F.max(version), F.lit(0)) + 1).alias("_wp"))
-    stamped = (
-        changes.withColumn("_deleted", F.col("_op") == "delete")
-        .drop("_op")
-        .crossJoin(F.broadcast(nxt))
-        .withColumnRenamed("_wp", version)
-    )
-    return versions.unionByName(stamped.select(*versions.columns))
+    tombstoned = changes.withColumn("_deleted", F.col("_op") == "delete").drop("_op")
+    return _commit(versions, tombstoned, version)
 
 
 def conservation(

@@ -4,7 +4,8 @@ work: file count x row ordering, isolated via symlink-mix corpus dirs
 (all tables symlink the r14 corpus; only events varies).
 
 Variants:
-  adj2    — pre-r14 layout (1-2 files, crossJoin adjacency, ~7.5 MB)
+  adj2    — pre-r14 layout (1-2 files, crossJoin adjacency, ~7.5 MB),
+            built by ab_layout.ensure_old_layout when missing
   rr32    — r14 round-robin 32 files (scatter, ~21 MB)
   rr8     — round-robin 8 files (scatter)
   rng32   — repartitionByRange(32, event_id) + sortWithinPartitions(ts)
@@ -23,6 +24,7 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 import bench  # noqa: E402
+from ab_layout import ensure_old_layout  # noqa: E402
 from opusdb_spark.registry import queries  # noqa: E402
 from opusdb_spark.session import get_spark  # noqa: E402
 
@@ -35,24 +37,24 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = queries()
     new_dir = bench.ensure_sf1(spark, src)
-    old_dir = os.path.join(_REPO, ".scratch", "bench_sf1_oldlayout")
+    old_dir = ensure_old_layout(spark, src)
     scratch = os.path.join(_REPO, ".scratch")
 
     ev_new = spark.read.parquet(f"{new_dir}/events.parquet")
-    variants = {}
-    # adj2: reuse the oldlayout events
-    variants["adj2"] = f"{old_dir}/events.parquet"
-    p = f"{scratch}/ab_ev_rr8"
-    if not os.path.exists(p):
-        ev_new.repartition(8).write.parquet(p)
-    variants["rr8"] = p
+    variants = {"adj2": f"{old_dir}/events.parquet"}
+    # the current corpus leaves events unsplit, so the round-robin
+    # variants are written here rather than aliased to the corpus
+    for n in (32, 8):
+        p = f"{scratch}/ab_ev_rr{n}"
+        if not os.path.exists(p):
+            ev_new.repartition(n).write.parquet(p)
+        variants[f"rr{n}"] = p
     p = f"{scratch}/ab_ev_rng32"
     if not os.path.exists(p):
         ev_new.repartitionByRange(32, "event_id").sortWithinPartitions(
             "event_id"
         ).write.parquet(p)
     variants["rng32"] = p
-    variants["rr32"] = f"{new_dir}/events.parquet"
 
     # symlink-mix dirs
     mixes = {}

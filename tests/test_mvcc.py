@@ -402,3 +402,112 @@ def test_nested_changesets_flatten_to_single_commit(spark):
     # composed the change-sets without reordering or double-commit
     post = {r.ref_id: r.value for r in mvcc.latest(committed).collect()}
     assert post == own
+
+
+# ------------------------------------------ one-task path on small stores
+
+
+def _store(spark, tmp_path):
+    """A small versions store in three parquet files, read back from
+    disk so Catalyst has a size estimate for it (a frame built by
+    createDataFrame reports none and always takes the partitioned
+    path). Refs 0-9, write points 0-5, refs born at 0, 1 or 2."""
+    rows = [
+        (ref, wp, float(ref * 100 + wp))
+        for ref in range(10)
+        for wp in range(ref % 3, 6)
+    ]
+    path = str(tmp_path / "versions")
+    spark.createDataFrame(
+        rows, "ref_id long, write_point long, value double"
+    ).repartition(3).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _changes(spark):
+    return spark.createDataFrame(
+        [(1, 11.0, "upsert"), (4, None, "delete"), (42, 5.0, "upsert")],
+        "ref_id long, value double, _op string",
+    )
+
+
+def _shuffles(df) -> list[str]:
+    """Shuffle exchanges of the executed plan (broadcasts excluded)."""
+    import re
+
+    from opusdb_spark.plans import executed_plan_str
+
+    return re.findall(r"\bExchange \w+(?:\(\w+)?", executed_plan_str(df))
+
+
+def test_small_store_snapshot_sum_is_one_job_one_task(spark, tmp_path):
+    """The bank read (benchmark/bank.clj:41-44): a snapshot sum over a
+    store under the size threshold runs without a shuffle, as one job
+    of one task."""
+    v = _store(spark, tmp_path)
+    total = mvcc.snapshot(v, 3).agg(F.sum("value"))
+    sc = spark.sparkContext
+    sc.setJobGroup("mvcc_small_snapshot", "small-store snapshot sum")
+    try:
+        got = total.collect()[0][0]
+    finally:
+        sc.setJobGroup("idle", "idle")
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup("mvcc_small_snapshot")
+    assert len(jobs) == 1, jobs
+    stages = st.getJobInfo(jobs[0]).stageIds
+    assert [st.getStageInfo(s).numTasks for s in stages] == [1]
+    assert got == sum(ref * 100 + 3 for ref in range(10))
+    assert not _shuffles(total)
+
+
+def test_small_store_retain_diff_and_stamp_need_no_shuffle(spark, tmp_path):
+    v = _store(spark, tmp_path)
+    ch = _changes(spark)
+    assert not _shuffles(mvcc.retain(v, 2))
+    assert not _shuffles(mvcc.snapshot_diff(v, 1, 4))
+    # the next-write-point aggregate: one task, no SinglePartition exchange
+    assert not _shuffles(mvcc.append_versions(v, ch.drop("_op")))
+    assert not _shuffles(mvcc.merge(v, ch))
+
+
+def test_disabled_threshold_restores_partitioned_plans(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(mvcc, "_SINGLE_TASK_MAX_BYTES", -1)
+    v = _store(spark, tmp_path)
+    read = mvcc.snapshot(v, 3).agg(F.sum("value"))
+    assert "Exchange hashpartitioning(ref_id" in " ".join(_shuffles(read))
+    assert "Exchange hashpartitioning(ref_id" in " ".join(_shuffles(mvcc.retain(v, 2)))
+    stamp = mvcc.append_versions(v, _changes(spark).drop("_op"))
+    assert "Exchange SinglePartition" in " ".join(_shuffles(stamp))
+
+
+_OPS = {
+    "latest": lambda v, ch: mvcc.latest(v),
+    "snapshot": lambda v, ch: mvcc.snapshot(v, 3),
+    "retain": lambda v, ch: mvcc.retain(v, 2),
+    "snapshot_diff": lambda v, ch: mvcc.snapshot_diff(v, 1, 4),
+    "append_versions": lambda v, ch: mvcc.append_versions(v, ch.drop("_op")),
+    "read_own_writes": lambda v, ch: mvcc.read_own_writes(v, ch.drop("_op")),
+    "merge": lambda v, ch: mvcc.merge(v, ch),
+}
+
+
+def test_one_task_and_partitioned_paths_return_identical_rows(
+    spark, tmp_path, monkeypatch
+):
+    from collections import Counter
+
+    from opusdb_spark.plans import explain_str
+
+    v, ch = _store(spark, tmp_path), _changes(spark)
+    small = {}
+    for name, op in _OPS.items():
+        df = op(v, ch)
+        assert "Coalesce 1" in explain_str(df, "simple"), name
+        small[name] = Counter(map(tuple, df.collect()))
+    monkeypatch.setattr(mvcc, "_SINGLE_TASK_MAX_BYTES", -1)
+    for name, op in _OPS.items():
+        df = op(v, ch)
+        assert "Coalesce" not in explain_str(df, "simple"), name
+        assert Counter(map(tuple, df.collect())) == small[name], name
+        assert small[name], name

@@ -415,14 +415,20 @@ def test_attribution_single_window_shuffle(spark):
     assert _n_exchange_nodes(p) <= 2
 
 
-def test_time_travel_diff_single_aggregate_no_join(spark):
-    # both snapshots from ONE groupBy: no Join operator, one shuffle
-    p = plan(_Q["mvcc_time_travel_diff"].fn(spark, SF))
-    assert "Join" not in p, "diff must not join two snapshot builds"
-    assert _n_exchange_nodes(p) == 1
-    assert "LessThanOrEqual(event_id,7000)" in p.replace("\n", " "), (
-        "new-point bound must reach the parquet scan"
-    )
+def test_time_travel_diff_single_aggregate_no_join(spark, monkeypatch):
+    # both snapshots from ONE groupBy: no Join operator; the sf test data
+    # is under the one-task threshold (no shuffle), a larger store takes
+    # one shuffle on the key
+    from opusdb_spark import mvcc as M
+
+    for limit, n_shuffles in ((M._SINGLE_TASK_MAX_BYTES, 0), (-1, 1)):
+        monkeypatch.setattr(M, "_SINGLE_TASK_MAX_BYTES", limit)
+        p = plan(_Q["mvcc_time_travel_diff"].fn(spark, SF))
+        assert "Join" not in p, "diff must not join two snapshot builds"
+        assert _n_exchange_nodes(p) == n_shuffles
+        assert "LessThanOrEqual(event_id,7000)" in p.replace("\n", " "), (
+            "new-point bound must reach the parquet scan"
+        )
 
 
 def test_mode_two_level_agg_no_window(spark):
